@@ -22,15 +22,13 @@ too big for one executor.  The scale path is implemented in
 by shard id and each task lazily loads ONLY the shard files present in
 its partition (typically one), so per-task memory is O(m/8) regardless
 of S.  Shards are persisted one file per shard with hard-link reuse for
-shards untouched in a round (save_dir), the same incremental-snapshot
-shape as the bucketed url_seen store.  The broadcast probe remains the
+shards untouched in a round (save_dir).  The broadcast probe remains the
 default at sandbox scale (64 x 128 KB) where one task per shard would
 cost more in scheduling than it saves.
 """
 
 from __future__ import annotations
 
-import io
 import json
 import os
 import shutil
@@ -88,26 +86,12 @@ class BloomShards:
     def merge_partial(self, shard_id: int, partial: bytes) -> None:
         self.bits[shard_id] |= np.frombuffer(partial, dtype=np.uint8)
 
-    # -- persistence (resume support) ----------------------------------------
-
-    def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(path), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "wb") as f:
-            np.savez(f, bits=self.bits, m=self.m, k=self.k)
-        os.replace(tmp, path)
+    # -- persistence: one file per shard (resume + scale path) -----------------
 
     @classmethod
     def load(cls, path: str) -> "BloomShards":
-        if os.path.isdir(path):
-            return cls.load_dir(path)
-        with open(path, "rb") as f:
-            z = np.load(io.BytesIO(f.read()))
-        obj = cls(z["bits"].shape[0], int(z["m"]), int(z["k"]))
-        obj.bits = z["bits"]
-        return obj
-
-    # -- per-shard directory format (scale path) ------------------------------
+        """Load a filter saved by :meth:`save_dir`."""
+        return cls.load_dir(path)
 
     def save_dir(
         self,
@@ -117,8 +101,8 @@ class BloomShards:
     ) -> None:
         """One file per shard; shards untouched this round are HARD-LINKED
         from the previous version instead of rewritten (the incremental
-        rebuild the north_rule names; same shape as the bucketed url_seen
-        snapshots).  dirty_shards=None rewrites everything."""
+        rebuild the north_rule names).  dirty_shards=None rewrites
+        everything."""
         tmp = path + ".tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)

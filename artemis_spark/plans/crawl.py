@@ -98,17 +98,18 @@ class CrawlConfig:
     # only its shard file (no S*m/8 broadcast).  Default False: at sandbox
     # shard sizes the broadcast is cheaper; at 4096x3MB it is mandatory.
     bloom_shard_local: bool = False
-    # url_seen is stored partitioned by pmod(xxhash64(host), state_buckets);
-    # a round rewrites only buckets containing updates and hard-links the
-    # rest (Iceberg-manifest analogue) — O(dirty) not O(|state|) per round.
-    # 256 by default (pinned in the manifest on first commit, so raising
-    # it never mixes moduli within one state dir); at 10^10 URLs use 4096+.
+    # compacted state bases are stored partitioned by
+    # pmod(xxhash64(host), state_buckets), so wave-sliced reads prune
+    # whole bucket dirs.  256 by default (pinned in the manifest on first
+    # commit, so raising it never mixes moduli within one state dir); at
+    # 10^10 URLs use 4096+.
     state_buckets: int = 256
-    # >0 enables the delta-log MERGE layout: each round appends only its
-    # update rows as a delta version (write cost O(|wave|) even when every
-    # bucket is dirty); reads reconstruct last-writer-wins per url, and
-    # the chain is compacted to a single base every N rounds to bound
-    # read amplification.  0 = always rewrite dirty buckets (r02 layout).
+    # delta-log state layout (sources/state.py): each round appends only
+    # its update rows as a delta version (write cost O(|wave|) even when
+    # every bucket is dirty); reads reconstruct per key, and a chain of
+    # this many versions is compacted to one bucketed base on the next
+    # round to bound read amplification.  Must be >= 1; 1 compacts every
+    # round.
     state_delta_max_chain: int = 8
     decode_payloads: bool = True  # disable for pure scheduler benchmarks
     # T2/T3: extract outlinks from the fetched page BYTES (html/sitemap
@@ -118,22 +119,7 @@ class CrawlConfig:
     # salt>0 shapes the wave for a real per-host HTTP fetcher; the
     # synthetic join path leaves it 0 (the join partitions by url).
     fetch_salt: int = 0
-    cache_web: bool = True  # cache link_graph/payloads partitioned on join keys
     light_stats: bool = False  # skip info-only frontier-size count (bench mode)
-    # Truncate the lineage of each round's hot intermediates with
-    # localCheckpoint(eager=False) instead of cache().  A round's tree
-    # (chain reconstruction ∪ recrawl scan → dedupe → robots/auth →
-    # politeness → fetch join → markup extraction → MERGE) feeds ~30
-    # driver actions (writes, collects, counts); with cache() every one
-    # of them re-analyzes and re-optimizes the FULL tree and AQE replans
-    # it stage by stage — profiling showed the executors 98% idle
-    # (wall 429s vs 291s total task time on 32 cores) with the wall
-    # almost entirely single-threaded driver planning.  Pinning collapses
-    # each materialized intermediate to a leaf scan so downstream plans
-    # stay O(1)-sized however deep the round pipeline gets.  Losing RDD
-    # lineage is safe by design: the committed state store is the
-    # recovery mechanism (rounds are resumable), not Spark recompute.
-    plan_pin: bool = True
 
 
 class CrawlEngine:
@@ -148,6 +134,11 @@ class CrawlEngine:
         self.spark = spark
         self.web_dir = web_dir
         self.cfg = config or CrawlConfig()
+        if self.cfg.state_delta_max_chain < 1:
+            raise ValueError(
+                "CrawlConfig.state_delta_max_chain must be >= 1 (1 compacts "
+                f"every round), got {self.cfg.state_delta_max_chain}"
+            )
         self.seeds_path = seeds_path or f"{web_dir}/seeds.parquet"
         self.store = StateStore(spark, state_dir)
         self.link_graph = spark.read.parquet(f"{web_dir}/link_graph.parquet")
@@ -167,11 +158,10 @@ class CrawlEngine:
             # one the configured extraction path (T2/T3) actually reads
             include_outlinks=not use_markup,
             include_body=use_markup,
-        )
-        self.payload_cache = build_payload_cache(self.payloads, self.cfg.num_partitions)
-        if self.cfg.cache_web:
-            self.web = self.web.persist()
-            self.payload_cache = self.payload_cache.persist()
+        ).persist()
+        self.payload_cache = build_payload_cache(
+            self.payloads, self.cfg.num_partitions
+        ).persist()
         self.robots = spark.read.parquet(f"{web_dir}/robots_rules.parquet")
         self.domain_rules = spark.read.parquet(f"{web_dir}/domain_rules.parquet")
         # per-host accreditation rules (reference Task.py:12,41); absent
@@ -283,10 +273,7 @@ class CrawlEngine:
         if self._bloom is None:
             v = self.store.current_version("bloom")
             if v >= 0:
-                legacy = self._bloom_path(v) + ".npz"  # pre-r2 single-file format
-                self._bloom = BloomShards.load(
-                    legacy if os.path.exists(legacy) else self._bloom_path(v)
-                )
+                self._bloom = BloomShards.load(self._bloom_path(v))
             else:
                 self._bloom = BloomShards(self.cfg.bloom_shards, self.cfg.bloom_bits_per_shard)
         return self._bloom
@@ -354,23 +341,19 @@ class CrawlEngine:
         stored_b = self.store.manifest().get("state_buckets")
         n_buckets = int(stored_b) if stored_b else cfg.state_buckets
         bucket_of = lambda c: F.pmod(F.xxhash64(c), F.lit(n_buckets)).cast("int")
+        with_bucket = lambda df: df.withColumn("bucket", bucket_of(F.col("host")))
 
         def _pin(df: DataFrame) -> DataFrame:
-            """Materialize-once node: localCheckpoint truncates the plan
-            (downstream actions see a leaf scan, not the round's whole
-            tree — see cfg.plan_pin), cache() keeps full lineage."""
-            return df.localCheckpoint(eager=False) if cfg.plan_pin else df.cache()
-
-        import os as _os
-        _timing = bool(int(_os.environ.get("ARTEMIS_ROUND_TIMING", "0")))
-        _phases: dict[str, float] = {}
-        _last = [t_start]
-
-        def _mark(name: str) -> None:
-            if _timing:
-                t = time.monotonic()
-                _phases[name] = round(t - _last[0], 2)
-                _last[0] = t
+            """Materialize-once node.  A round's tree (chain
+            reconstruction ∪ recrawl scan → dedupe → robots/auth →
+            politeness → fetch join → markup extraction → MERGE) feeds ~30
+            driver actions; with cache() every one of them re-analyzes,
+            re-optimizes and AQE-replans the FULL tree on the driver
+            (profiled: executors 98% idle).  localCheckpoint truncates the
+            lineage so downstream plans see a leaf scan and stay O(1)-
+            sized.  Losing RDD lineage is safe by design: the committed
+            state store, not Spark recompute, is the recovery mechanism."""
+            return df.localCheckpoint(eager=False)
 
         # A2 recrawl scheduler (/root/reference/src/Master.py:330-342),
         # merge-on-READ: stale URLs are derived from the committed
@@ -408,7 +391,6 @@ class CrawlEngine:
 
         frontier_raw = self.store.read("frontier", CANDIDATES_SCHEMA)
         pre_shuffle = _gate(frontier_raw.unionByName(recrawl_due))
-        _mark('state_reads')
 
         # THE routing shuffle (reference P2, /root/reference/src/Slave.py:145-172):
         # one hash exchange by host up front; every downstream join/window/
@@ -430,7 +412,6 @@ class CrawlEngine:
         else:
             n_in = candidates.count()
             round_is_empty = n_in == 0
-        _mark('candidates_count')
         if round_is_empty:
             candidates.unpersist()
             url_seen_pre.unpersist()  # cached when the delta chain is long
@@ -440,17 +421,13 @@ class CrawlEngine:
         # F1 bloom pre-filter -> F4 exact validate
         url_seen = url_seen_pre
         bloom_v = self.store.current_version("bloom")
-        if (
-            cfg.bloom_shard_local
-            and bloom_v >= 0
-            and os.path.isdir(self._bloom_path(bloom_v))
-        ):
+        if cfg.bloom_shard_local and bloom_v >= 0:
             probed = with_bloom_maybe_seen_shard_local(
                 candidates, self._bloom_path(bloom_v), cfg.num_partitions
             )
         else:
-            # broadcast probe (also round 0 / legacy-npz states, where no
-            # per-shard directory exists yet)
+            # broadcast probe (also round 0, where no per-shard directory
+            # exists yet)
             probed = with_bloom_maybe_seen(
                 self.spark, candidates, self.bloom, bc_registry=self._round_bcs
             )
@@ -973,112 +950,33 @@ class CrawlEngine:
         )
         seen_updates = _pin(seen_updates)  # consumed by merge_upsert, recrawl merged_state and bloom
 
-        # host PageRank proxy: inbound links observed this round.  In the
-        # delta-log layout (A3 at scale) these per-host increments are the
-        # ONLY rows written for host_stats on a normal round; the full
-        # cumulative view exists lazily as the chain-sum reconstruction
-        # and is materialized only on compaction rounds (merged_stats).
+        # host PageRank proxy: inbound links observed this round — the
+        # ONLY rows a normal round appends to host_stats; the cumulative
+        # view is the delta chain's sum reconstruction.
         inlink_delta = extracted_with_depth.groupBy("host").agg(
             F.count("*").cast("long").alias("inlinks")
         )
-        merged_stats = (
-            host_stats_raw.drop("bucket")
-            .withColumnRenamed("inlinks", "_old")
-            .join(inlink_delta.withColumnRenamed("inlinks", "_new"), "host", "full")
-            .select(
-                "host",
-                (
-                    F.coalesce(F.col("_old"), F.lit(0))
-                    + F.coalesce(F.col("_new"), F.lit(0))
-                ).cast("long").alias("inlinks"),
-            )
-        )
 
-        seen_cols = [f.name for f in URL_SEEN_SCHEMA.fields]
-        # ----- MERGE layout decisions.
-        # A legacy (pre-bucketing) url_seen version has flat files and no
-        # bucket partition column; nothing could be hard-linked from it, so
-        # the whole state must be treated as dirty for one migration round.
-        legacy_layout = "bucket" not in url_seen.columns
-        cur_seen = (
-            url_seen
-            if not legacy_layout  # stored partition col -> pruning
-            else url_seen.withColumn("bucket", bucket_of(F.col("host")))
-        )
-        # Delta-log MERGE (Iceberg merge-on-read analogue): a normal round
-        # appends ONLY this round's update rows as a new delta version —
-        # per-round write cost tracks |updates|, not |dirty buckets| —
-        # and the read side reconstructs last-writer-wins per url
-        # (state.py _read_chain).  Every state_delta_max_chain rounds the
-        # chain is compacted back to a single bucketed base so read
-        # amplification stays bounded.  Broad waves that dirty every
-        # bucket (the r02 scale-killer: bucketed MERGE degraded to a full
-        # rewrite) now cost O(|wave|) on all but the compaction round.
-        chain = self.store.delta_chain("url_seen")
-        base_v = self.store.current_version("url_seen")
-        cur_chain = chain if chain else ([base_v] if base_v >= 0 else [])
-        delta_on = cfg.state_delta_max_chain > 0 and not legacy_layout
-        full_rewrite = legacy_layout or (
-            delta_on and len(cur_chain) >= cfg.state_delta_max_chain
-        )
-        will_delta = delta_on and not full_rewrite and len(cur_chain) >= 1
-
-        upd = seen_updates.withColumn("bucket", bucket_of(F.col("host")))
-        def _timed(fn):
-            if not _timing:
-                return fn
-
-            def wrap():
-                t0 = time.monotonic()
-                try:
-                    return fn()
-                finally:
-                    _phases[f"w_{fn.__name__}"] = round(time.monotonic() - t0, 2)
-
-            wrap.__name__ = fn.__name__
-            return wrap
-
-        # ----- robots_cache persist (early).
-        # Delta-log bookkeeping mirroring url_seen's (A1): a normal round
-        # APPENDS only this round's re-fetched rule sets — write cost
-        # O(|refreshed hosts|), one small job — and the read side keeps a
-        # host's NEWEST rule set (state.py group_last); the chain
-        # compacts to one bucketed base every state_delta_max_chain
-        # rounds.  This replaced the per-round read-dirty-buckets +
-        # anti-join + rewrite job, the largest fixed item of the r4
-        # serial write tail (w__robots_cache 8-57 s at local[1]).
-        rc_chain = self.store.delta_chain("robots_cache")
-        rc_base_v = self.store.current_version("robots_cache")
-        rc_cur_chain = rc_chain if rc_chain else ([rc_base_v] if rc_base_v >= 0 else [])
-        rc_delta_on = cfg.state_delta_max_chain > 0 and rc_has_bucket
-        rc_will_delta = (
-            rc_delta_on
-            and len(rc_cur_chain) >= 1
-            and len(rc_cur_chain) < cfg.state_delta_max_chain
-        )
+        # ----- state persists (A1 MERGE) in the delta-log layout.  Every
+        # host-keyed table goes through StateStore.write_chained, which
+        # either appends this round's update rows as a delta version
+        # (write cost O(|updates|), even when every bucket is dirty) or,
+        # once the chain is full or the current read predates bucketing,
+        # compacts the merged view into one bucketed base.  Each table
+        # below supplies only the physical shape of the two writes.
+        max_chain = cfg.state_delta_max_chain
+        base_parts = max(1, min(cfg.num_partitions, n_buckets))
+        upd = with_bucket(seen_updates)
 
         def _robots_cache():
-            """Returns (version, chain) for the manifest commit."""
+            """(version, chain) for the commit, or None when nothing was
+            refreshed: the committed version is already current, so there
+            is no write job at all."""
             if rc_has_bucket and refreshed.isEmpty():
-                # nothing refreshed this round: the committed version is
-                # already current — no write job at all
-                return rc_base_v, rc_cur_chain
-            if rc_will_delta:
-                # unpartitioned + coalesce(1): a delta holds only this
-                # round's re-fetched rule sets (tiny), so one file beats
-                # ~|buckets| one-row dir files; the bucket-pruned
-                # PartitionFilter path stays on the BASE member, which is
-                # the only O(|hosts|)-sized thing the wave slice reads
-                delta = refreshed.withColumn("bucket", bucket_of(F.col("host")))
-                v = self.store.write_version_delta(
-                    "robots_cache", delta.coalesce(1), partitioned=False
-                )
-                return v, rc_cur_chain + [v]
-            if rc_delta_on or not rc_has_bucket:
-                # compaction round / legacy flat-layout migration: one
-                # full bucketed rewrite of the merged view
-                # (robots_cache_raw IS the chain reconstruction when a
-                # chain exists)
+                return None
+
+            def compacted():
+                # robots_cache_raw IS the chain reconstruction
                 full = (
                     robots_cache_raw.drop("bucket")
                     .join(
@@ -1087,43 +985,16 @@ class CrawlEngine:
                         "left_anti",
                     )
                     .unionByName(refreshed)
-                    .withColumn("bucket", bucket_of(F.col("host")))
                 )
-                v = self.store.write_version_bucketed(
-                    "robots_cache",
-                    full.repartition(
-                        max(1, min(cfg.num_partitions, n_buckets)), "bucket"
-                    ),
-                    [],
-                    link_clean=False,
-                )
-                return v, [v]
-            # delta layout disabled (state_delta_max_chain=0, the r02
-            # layout): dirty-bucket incremental rewrite, clean buckets
-            # hard-linked — the pre-r5 path, kept for that config
-            dirty = sorted(
-                int(x["b"])
-                for x in refreshed.select(bucket_of(F.col("host")).alias("b"))
-                .distinct()
-                .collect()
+                return with_bucket(full).repartition(base_parts, "bucket")
+
+            # a delta holds only this round's re-fetched rule sets (tiny):
+            # one file beats ~|buckets| one-row files
+            return self.store.write_chained(
+                "robots_cache", robots_cache_raw, max_chain,
+                delta=lambda: with_bucket(refreshed).coalesce(1),
+                compacted=compacted,
             )
-            old_dirty = robots_cache_raw.filter(
-                F.col("bucket").isin(dirty) if dirty else F.lit(False)
-            ).drop("bucket")
-            new_dirty = (
-                old_dirty.join(
-                    F.broadcast(refreshed.select("host").distinct()),
-                    "host",
-                    "left_anti",
-                )
-                .unionByName(refreshed)
-                .withColumn("bucket", bucket_of(F.col("host")))
-            )
-            n_write = max(1, min(cfg.num_partitions, len(dirty) or 1))
-            v = self.store.write_version_bucketed(
-                "robots_cache", new_dirty.repartition(n_write, "bucket"), dirty
-            )
-            return v, [v]
 
         def _sessions():
             # tiny per-host table (only auth-gated hosts ever get rows);
@@ -1135,56 +1006,29 @@ class CrawlEngine:
 
         # Materialize the round's heavy shared parent ONCE (the fetch
         # join + status/extraction projection), then overlap its
-        # independent consumers in threads: the dirty-bucket collect
-        # (which also materializes the seen_updates pin every persist job
-        # reuses), the exploded resolve+canonicalize extraction pin
-        # (the round's regex-heaviest projection, needed by the fan-out's
-        # _frontier and _stats jobs), and the two early persists —
-        # robots_cache and auth_sessions read only pins the fetch job
-        # already materialized (refreshed, gated), so they overlap the
-        # extraction materialize instead of serializing after it in the
-        # write tail.  Sequencing fetched first matters: two concurrent
-        # jobs racing to compute a not-yet-materialized pin would each
-        # schedule the full fetch join.
+        # independent consumers in threads: the seen_updates count
+        # (which materializes the pin every persist job reuses — the
+        # fan-out below reads it concurrently), the exploded
+        # resolve+canonicalize extraction pin (the round's regex-heaviest
+        # projection, needed by the fan-out's _frontier and _stats jobs),
+        # and the two early persists — robots_cache and auth_sessions
+        # read only pins the fetch job already materialized (refreshed,
+        # gated), so they overlap the extraction materialize instead of
+        # serializing after it in the write tail.  Sequencing fetched
+        # first matters: two concurrent jobs racing to compute a
+        # not-yet-materialized pin would each schedule the full fetch join.
         fetched.count()
-        _mark("fetched_materialize")
         pool = ThreadPoolExecutor(max_workers=8)
         try:
-            f_rv = pool.submit(_timed(_robots_cache))
-            f_sv = pool.submit(_timed(_sessions))
-            _f_dirty = pool.submit(
-                lambda: sorted(
-                    int(x["bucket"])
-                    for x in upd.select("bucket").distinct().collect()
-                )
-            )
-            _f_ex = pool.submit(extracted_with_depth.count)
-            dirty_buckets = _f_dirty.result()
-            _f_ex.result()
+            f_rv = pool.submit(_robots_cache)
+            f_sv = pool.submit(_sessions)
+            f_seen = pool.submit(seen_updates.count)
+            f_ex = pool.submit(extracted_with_depth.count)
+            f_seen.result()
+            f_ex.result()
         except BaseException:
             pool.shutdown(wait=False, cancel_futures=True)
             raise
-        _mark("seen_updates_and_extract_materialize")
-        if will_delta:
-            merged_dirty = None  # nothing to merge at write time
-        else:
-            if full_rewrite:
-                is_dirty = F.lit(True)
-            elif dirty_buckets:
-                is_dirty = F.col("bucket").isin(dirty_buckets)
-            else:
-                is_dirty = F.lit(False)
-            # url alone is the key (primary key of url_seen; host is
-            # derived from it) — a single plain-equality key lets the
-            # state side reuse the reconstruction's hash(url)
-            # partitioning on compaction rounds (see dedup.py).
-            upd_keys = seen_updates.select(F.col("url").alias("u_url"))
-            merged_dirty = _pin(
-                cur_seen.filter(is_dirty)
-                .join(upd_keys, F.col("url") == F.col("u_url"), "left_anti")
-                .select(*seen_cols, "bucket")
-                .unionByName(upd.select(*seen_cols, "bucket"))
-            )
 
         # Dedupe before writing: extraction emits the same URL from many
         # parents (3-4x write amplification otherwise).  The dedupe keys
@@ -1260,70 +1104,53 @@ class CrawlEngine:
             self.store.append_round("lineage_metrics", lineage, r)
 
         def _merge():
-            if will_delta:
-                # delta append: write ONLY this round's updates,
-                # UNPARTITIONED (bucket stays a plain column) and in the
-                # pin's existing wave partitioning.  url_seen reads are
-                # always full reconstructions (validate join + recrawl
-                # scan touch every bucket), so bucket=N dirs buy no
-                # pruning here and a 256-bucket wave would shatter each
-                # delta into ~256 tiny files (the r5 state_reads
-                # profile's dominant term); skipping the repartition
-                # also drops a per-round O(|wave|) shuffle.
-                return self.store.write_version_delta(
-                    "url_seen", upd, partitioned=False
+            def compacted():
+                # url alone is the key (primary key of url_seen; host is
+                # derived from it) — a single plain-equality key lets the
+                # state side reuse the reconstruction's hash(url)
+                # partitioning (see dedup.py).
+                cur = url_seen if "bucket" in url_seen.columns else with_bucket(url_seen)
+                upd_keys = seen_updates.select(F.col("url").alias("u_url"))
+                seen_cols = [f.name for f in URL_SEEN_SCHEMA.fields]
+                return (
+                    cur.join(upd_keys, F.col("url") == F.col("u_url"), "left_anti")
+                    .select(*seen_cols, "bucket")
+                    .unionByName(upd.select(*seen_cols, "bucket"))
+                    .repartition(cfg.num_partitions, "bucket")
                 )
-            # bucketed rewrite: dirty buckets written, clean buckets
-            # hard-linked — except on compaction/migration rounds, where
-            # the current version dir is a partial delta (or flat legacy)
-            # and nothing may be linked from it.
-            n_write = (
-                cfg.num_partitions
-                if full_rewrite
-                else max(1, min(cfg.num_partitions, len(dirty_buckets)))
-            )
-            df = merged_dirty.repartition(n_write, "bucket")
-            return self.store.write_version_bucketed(
-                "url_seen", df, dirty_buckets, link_clean=not full_rewrite
-            )
 
-        # host_stats delta-chain bookkeeping (mirrors url_seen's): a
-        # normal round APPENDS only this round's inlink increments; every
-        # state_delta_max_chain rounds (or on legacy-layout migration) the
-        # chain-sum reconstruction is compacted to one bucketed base.
-        hs_chain = self.store.delta_chain("host_stats")
-        hs_base_v = self.store.current_version("host_stats")
-        hs_cur_chain = hs_chain if hs_chain else ([hs_base_v] if hs_base_v >= 0 else [])
-        hs_delta_on = cfg.state_delta_max_chain > 0 and hs_has_bucket
-        hs_will_delta = (
-            hs_delta_on
-            and len(hs_cur_chain) >= 1
-            and len(hs_cur_chain) < cfg.state_delta_max_chain
-        )
+            # the delta keeps the pin's existing wave partitioning:
+            # skipping a repartition drops a per-round O(|wave|) shuffle
+            return self.store.write_chained(
+                "url_seen", url_seen, max_chain, delta=lambda: upd, compacted=compacted
+            )
 
         def _stats():
-            if hs_will_delta:
-                # unpartitioned delta (bucket stays a column): a delta is
-                # O(|wave hosts|) rows, so shattering it into bucket=N
-                # one-row dir files costs more to re-open than it saves;
-                # wave-sliced reads keep PartitionFilter pruning on the
-                # bucketed BASE (the O(|hosts|) member) and filter the
-                # small deltas by column stats.  coalesce, not
-                # repartition: no shuffle, just fewer output files.
-                delta = inlink_delta.withColumn("bucket", bucket_of(F.col("host")))
-                return self.store.write_version_delta(
-                    "host_stats",
-                    delta.coalesce(max(1, cfg.num_partitions // 4)),
-                    partitioned=False,
+            def compacted():
+                # the only round that touches all hosts: the cumulative
+                # view (host_stats_raw IS the chain-sum reconstruction)
+                merged = (
+                    host_stats_raw.drop("bucket")
+                    .withColumnRenamed("inlinks", "_old")
+                    .join(inlink_delta.withColumnRenamed("inlinks", "_new"), "host", "full")
+                    .select(
+                        "host",
+                        (
+                            F.coalesce(F.col("_old"), F.lit(0))
+                            + F.coalesce(F.col("_new"), F.lit(0))
+                        ).cast("long").alias("inlinks"),
+                    )
                 )
-            # compaction or legacy migration: one full bucketed rewrite of
-            # the cumulative view — the only round that touches all hosts
-            full = merged_stats.withColumn("bucket", bucket_of(F.col("host")))
-            return self.store.write_version_bucketed(
-                "host_stats",
-                full.repartition(max(1, min(cfg.num_partitions, n_buckets)), "bucket"),
-                [],
-                link_clean=False,
+                return with_bucket(merged).repartition(base_parts, "bucket")
+
+            # coalesce, not repartition: no shuffle, just fewer output
+            # files for an O(|wave hosts|) delta
+            return self.store.write_chained(
+                "host_stats", host_stats_raw, max_chain,
+                delta=lambda: with_bucket(inlink_delta).coalesce(
+                    max(1, cfg.num_partitions // 4)
+                ),
+                compacted=compacted,
             )
 
         def _frontier():
@@ -1338,17 +1165,7 @@ class CrawlEngine:
 
             cur_bv = self.store.current_version("bloom")
             prev = self._bloom_path(cur_bv)
-            legacy_npz = prev + ".npz"
-            if cur_bv >= 0 and os.path.exists(legacy_npz):
-                # pre-r2 single-file state: one driver-side migration
-                # round rewrites it in the per-shard dir format
-                dirty_shards = self.bloom.update_from_df(
-                    seen_updates.select("url", "host")
-                )
-                self.bloom.save_dir(self._bloom_path(cur_bv + 1))
-                self._bloom = None
-                return cur_bv + 1
-            if cur_bv >= 0 and os.path.isdir(prev):
+            if cur_bv >= 0:
                 meta = BloomShards.dir_meta(prev)
                 S_, m_, k_ = meta["num_shards"], meta["m"], meta["k"]
                 prev_dir = prev
@@ -1369,38 +1186,34 @@ class CrawlEngine:
             return cur_bv + 1
 
         try:
-            f_log = pool.submit(_timed(_crawl_log))
-            f_lin = pool.submit(_timed(_lineage))
-            f_uv = pool.submit(_timed(_merge))
-            f_hv = pool.submit(_timed(_stats))
-            f_fv = pool.submit(_timed(_frontier))
-            f_bv = pool.submit(_timed(_bloom))
+            f_log = pool.submit(_crawl_log)
+            f_lin = pool.submit(_lineage)
+            f_uv = pool.submit(_merge)
+            f_hv = pool.submit(_stats)
+            f_fv = pool.submit(_frontier)
+            f_bv = pool.submit(_bloom)
             f_log.result()
             f_lin.result()
-            uv, hv, fv, bv, sv = (
-                f_uv.result(), f_hv.result(), f_fv.result(), f_bv.result(),
-                f_sv.result(),
-            )
-            rv, rc_new_chain = f_rv.result()
+            fv, bv, sv = f_fv.result(), f_bv.result(), f_sv.result()
+            chained = {
+                "url_seen": f_uv.result(),
+                "host_stats": f_hv.result(),
+                "robots_cache": f_rv.result(),
+            }
         finally:
             pool.shutdown(wait=False, cancel_futures=True)
-        _mark('persist_fanout')
+        chained = {t: vc for t, vc in chained.items() if vc is not None}
         self.store.commit(
             r,
-            {"url_seen": uv, "host_stats": hv, "frontier": fv, "bloom": bv,
-             "robots_cache": rv, "auth_sessions": sv},
+            {"frontier": fv, "bloom": bv, "auth_sessions": sv,
+             **{t: v for t, (v, _) in chained.items()}},
             meta={"state_buckets": n_buckets},
-            delta_chains={
-                "url_seen": (cur_chain + [uv]) if will_delta else [uv],
-                "host_stats": (hs_cur_chain + [hv]) if hs_will_delta else [hv],
-                "robots_cache": rc_new_chain,
-            },
+            delta_chains={t: c for t, (_, c) in chained.items()},
         )
         # GC: superseded versions are unreachable once the manifest moved on;
         # keep one prior snapshot for post-hoc inspection (Iceberg's
         # expire_snapshots analogue)
         self.store.vacuum(keep_last=2)
-        _mark('commit_vacuum')
 
         totals = lineage.groupBy().agg(
             F.sum("urls_scheduled").alias("s"),
@@ -1409,7 +1222,6 @@ class CrawlEngine:
         ).collect()[0]
         n_sched, n_fetched, n_blocked = int(totals["s"] or 0), int(totals["f"] or 0), int(totals["b"] or 0)
         n_next = None if cfg.light_stats else next_frontier.count()
-        _mark('n_next_count')
         for df in (
             candidates,
             gated,
@@ -1418,7 +1230,6 @@ class CrawlEngine:
             extracted_with_depth,
             seen_updates,
             next_frontier,
-            merged_dirty,
             url_seen_pre,
             cand_hosts,
             cache_slice,
@@ -1427,16 +1238,12 @@ class CrawlEngine:
             wave_rules,
             lineage,
         ):
-            if df is not None:
-                df.unpersist()
+            df.unpersist()
         # every plan referencing this round's bloom broadcast has
         # materialized (the persist fan-out is complete), so the handle
         # can be destroyed — otherwise each round leaks one bitset copy
         while self._round_bcs:
             self._round_bcs.pop().destroy()
-        _mark('unpersist')
-        if _timing:
-            print(f"ROUND_TIMING r={r} " + json.dumps(_phases))
         # return contract: under cfg.light_stats the info-only counters
         # "candidates"/"new_candidates" are None (not 0, not a sentinel
         # int) — consumers aggregating per-round counts must skip None.

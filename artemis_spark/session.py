@@ -54,7 +54,7 @@ def engine_conf(n_shuffle: int) -> dict[str, str]:
         # driver).  Size the cache to hold several full rounds so
         # steady-state rounds recompile only the ~90 classes whose source
         # embeds round-varying primitive literals.  Same-window A/B
-        # (tools/knob_matrix.py): median-round 13.2k -> 22.0k URLs/s.
+        # (BENCH.md round 4): median-round 13.2k -> 22.0k URLs/s.
         # Static conf: must be set before the first session is built.
         "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.sql.session.timeZone": "UTC",

@@ -14,12 +14,20 @@ same contract over plain parquet:
     ``<table>/round={r}`` partition dirs, idempotently overwritten if a
     crashed round re-runs.
 
+The host-keyed state tables (url_seen, host_stats, robots_cache) share
+one layout, a delta log: a base version stored partitioned by
+``bucket = pmod(xxhash64(host), B)`` plus a chain of small
+unpartitioned delta versions holding only each round's update rows.
+Reads reconstruct the table per key (``DELTA_MERGE``); a bucket
+predicate above the read still prunes the base's ``bucket=N`` dirs.
+:meth:`StateStore.write_chained` is the one place that decides, per
+table and round, whether to append a delta (write cost O(|updates|))
+or compact the chain into a new bucketed base — the parquet emulation
+of Iceberg merge-on-read with periodic rewrite.
+
 Crash anywhere before the manifest swap leaves the previous snapshot
 intact; resume re-runs the incomplete round from its inputs.  On a real
-cluster the same interface maps 1:1 onto Iceberg MERGE + snapshot ids;
-the MERGE emulation (read current + anti-join + union + write next
-version) is the documented cost of the fallback: O(|state|) rewrite per
-round instead of Iceberg's file-level merge-on-read.
+cluster the same interface maps 1:1 onto Iceberg MERGE + snapshot ids.
 
 Reference analogue: there is none — the reference's state is RAM-only
 ARC caches that die with the process (/root/reference/src/Cache.py:54-135);
@@ -31,6 +39,7 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -197,87 +206,69 @@ class StateStore:
             .select(key, "_r.*", "bucket")
         )
 
+    def _next_vdir(self, table: str) -> tuple[int, str]:
+        """Number and (emptied) dir of the table's next version."""
+        v = self.current_version(table) + 1
+        path = self._vdir(table, v)
+        if os.path.exists(path):  # leftover from a crashed round
+            shutil.rmtree(path)
+        return v, path
+
     def write_version(self, table: str, df: DataFrame) -> int:
         """Write df as the next version dir; returns the version number
         (caller passes it to commit()). Not visible until committed."""
-        v = self.current_version(table) + 1
-        path = self._vdir(table, v)
-        if os.path.exists(path):  # leftover from a crashed round
-            shutil.rmtree(path)
+        v, path = self._next_vdir(table)
         df.write.mode("overwrite").parquet(path)
         return v
 
-    def write_version_delta(
-        self, table: str, upd_df: DataFrame, partitioned: bool = True
-    ) -> int:
+    def write_version_delta(self, table: str, upd_df: DataFrame) -> int:
         """Append-only delta version for a delta-chain table: writes ONLY
-        the round's update rows — per-round write cost is O(|updates|)
-        regardless of how many buckets they touch.  The caller records
-        the new version in the manifest's ``delta_chains`` via commit();
-        read() then reconstructs last-writer-wins.  This is the parquet
-        stand-in for Iceberg's merge-on-read delete/data files.
-
-        ``partitioned`` controls the physical layout: bucket=N partition
-        dirs serve tables whose READS prune on the stored bucket column
-        (host_stats / robots_cache wave slices — PartitionFilters skip
-        whole directories); tables that are always reconstructed in full
-        (url_seen: the validate join and recrawl scan read every bucket)
-        must pass False and keep ``bucket`` as a plain column — a
-        256-bucket wave would otherwise shatter every delta into ~256
-        tiny files and the per-round chain scan degenerates into file-
-        open overhead (measured: 12-33 s/round at local[1] by chain
-        length 6, the dominant term of the r5 state_reads profile)."""
+        the round's update rows, UNPARTITIONED (``bucket`` stays a plain
+        column) — per-round write cost is O(|updates|) regardless of how
+        many buckets they touch.  A 256-bucket wave written as bucket=N
+        dirs would shatter every delta into ~256 tiny files and the
+        per-round chain scan degenerates into file-open overhead
+        (measured: 12-33 s/round at local[1] by chain length 6); wave-
+        sliced reads keep PartitionFilter pruning on the bucketed base
+        and filter the small deltas by column stats."""
         if table not in DELTA_KEYS:
             raise ValueError(f"no delta key registered for table {table!r}")
-        v = self.current_version(table) + 1
-        path = self._vdir(table, v)
-        if os.path.exists(path):  # leftover from a crashed round
-            shutil.rmtree(path)
-        w = upd_df.write.mode("overwrite")
-        if partitioned:
-            w = w.partitionBy("bucket")
-        w.parquet(path)
+        v, path = self._next_vdir(table)
+        upd_df.write.mode("overwrite").parquet(path)
         return v
 
-    def write_version_bucketed(
+    def write_version_bucketed(self, table: str, df: DataFrame) -> int:
+        """Compacted base version: ``df`` (the table's full merged view,
+        with a ``bucket`` int column) written partitioned by bucket, so
+        reads under a bucket predicate skip whole directories."""
+        v, path = self._next_vdir(table)
+        df.write.mode("overwrite").partitionBy("bucket").parquet(path)
+        return v
+
+    def write_chained(
         self,
         table: str,
-        dirty_df: DataFrame,
-        dirty_buckets: list[int],
-        link_clean: bool = True,
-    ) -> int:
-        """Incremental version write for a host-bucketed state table.
+        current: DataFrame,
+        max_chain: int,
+        delta: Callable[[], DataFrame],
+        compacted: Callable[[], DataFrame],
+    ) -> tuple[int, list[int]]:
+        """Persist one round of a delta-chain table — the single
+        append-or-compact rule.
 
-        ``dirty_df`` carries a ``bucket`` int column covering exactly
-        ``dirty_buckets``; it is written partitioned by bucket, and every
-        clean bucket directory of the current version is HARD-LINKED into
-        the new version dir (byte-identical, no IO).  This is the parquet
-        stand-in for an Iceberg MERGE whose new snapshot manifest simply
-        references the untouched data files: per-round write cost is
-        O(|dirty buckets|), not O(|state|) — the fix for the round-scales-
-        with-history scale-killer (VERDICT r01).
-        """
-        v = self.current_version(table) + 1
-        path = self._vdir(table, v)
-        if os.path.exists(path):  # leftover from a crashed round
-            shutil.rmtree(path)
-        dirty_df.write.mode("overwrite").partitionBy("bucket").parquet(path)
-        cur_v = self.current_version(table)
-        if link_clean and cur_v >= 0:
-            cur = self._vdir(table, cur_v)
-            dirty = set(int(b) for b in dirty_buckets)
-            for d in os.listdir(cur):
-                if not d.startswith("bucket="):
-                    continue
-                k = int(d.split("=", 1)[1])
-                if k in dirty:
-                    continue
-                src, dst = os.path.join(cur, d), os.path.join(path, d)
-                os.makedirs(dst, exist_ok=True)
-                for f in os.listdir(src):
-                    if f.endswith(".parquet"):
-                        os.link(os.path.join(src, f), os.path.join(dst, f))
-        return v
+        ``current`` is this round's read of the table.  The round
+        compacts, writing ``compacted()`` as a new bucketed base, when
+        that read has no ``bucket`` column (the typed empty read of a
+        table with no rows yet, as on round 0, or a pre-bucketing flat
+        state dir) or when the chain
+        already holds ``max_chain`` versions; otherwise it appends
+        ``delta()``.  Returns ``(version, chain)`` for commit()."""
+        chain = self.delta_chain(table) or [self.current_version(table)]
+        if "bucket" in current.columns and len(chain) < max_chain:
+            v = self.write_version_delta(table, delta())
+            return v, chain + [v]
+        v = self.write_version_bucketed(table, compacted())
+        return v, [v]
 
     def merge_upsert(self, table: str, updates: DataFrame, key: str, schema) -> int:
         """MERGE INTO emulation: rows in ``updates`` replace same-key rows.

@@ -34,16 +34,6 @@ def test_shard_isolation():
     assert not bs.might_contain(np.array([1]), pd.Series(["http://a.test/x"]))[0]
 
 
-def test_save_load_roundtrip(tmp_path):
-    bs = BloomShards(3, bits_per_shard=1 << 14, n_hashes=5)
-    bs.add(1, pd.Series(["u1", "u2"]))
-    p = str(tmp_path / "bloom.npz")
-    bs.save(p)
-    bs2 = BloomShards.load(p)
-    assert bs2.m == bs.m and bs2.k == bs.k
-    assert (bs2.bits == bs.bits).all()
-
-
 def test_distributed_build_and_probe(spark):
     bs = BloomShards(8, bits_per_shard=1 << 16)
     df = spark.createDataFrame(

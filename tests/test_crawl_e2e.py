@@ -185,7 +185,7 @@ def test_crash_between_write_and_commit_is_recovered(spark, tmp_path, tiny_web):
     # point at them (url_seen garbage + a leftover frontier dir)
     store = crashed.store
     garbage = store.read("frontier").limit(1).withColumn("bucket", F.lit(0))
-    store.write_version_bucketed("url_seen", garbage, [0])
+    store.write_version_bucketed("url_seen", garbage)
     store.write_version("frontier", store.read("frontier").limit(2))
     assert store.last_round() == 1  # snapshot still the completed round
 

@@ -4,8 +4,9 @@ robots_cache / host_stats (VERDICT r02 #3).
 The scale claims under test:
   * a delta round writes O(|wave|) rows even when every bucket is dirty
     (the bucketed-rewrite layout degraded to O(|state|) on broad waves);
-  * the chain is compacted so read amplification stays bounded;
-  * the layout knob changes no observable crawl output;
+  * the chain is compacted so read amplification stays bounded, by one
+    append-or-compact rule (StateStore.write_chained);
+  * the chain cap changes no observable crawl output;
   * robots_cache / host_stats append only the hosts a round actually
     changed (re-fetched rule sets / inlink increments) — per-round
     write cost tracks the wave, never the host history.
@@ -17,9 +18,15 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import pyarrow.parquet as pq  # noqa: E402
+import pytest  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine  # noqa: E402
+from artemis_spark.plans.crawl import (  # noqa: E402
+    HOST_STATS_SCHEMA,
+    CrawlConfig,
+    CrawlEngine,
+)
+from artemis_spark.sources.state import StateStore  # noqa: E402
 
 
 def _version_rows(root: str, table: str, v: int) -> int:
@@ -33,34 +40,71 @@ def _version_rows(root: str, table: str, v: int) -> int:
     return n
 
 
-def _bucket_inodes(vdir: str) -> dict[int, set[tuple[str, int]]]:
-    out = {}
-    for d in os.listdir(vdir):
-        if d.startswith("bucket="):
-            k = int(d.split("=", 1)[1])
-            out[k] = {
-                (f, os.stat(os.path.join(vdir, d, f)).st_ino)
-                for f in os.listdir(os.path.join(vdir, d))
-                if f.endswith(".parquet")
-            }
-    return out
-
-
 def _cfg(**kw):
     base = dict(politeness_budget=5, num_partitions=4, bloom_shards=8)
     base.update(kw)
     return CrawlConfig(**base)
 
 
+def _never():
+    raise AssertionError("write_chained took the wrong branch")
+
+
+def test_write_chained_appends_or_compacts(spark, tmp_path):
+    """The single layout rule on a bare store: an un-bucketed read
+    compacts, a chain below the cap appends a delta and extends the
+    chain, a chain at the cap compacts and restarts at ``[v]``."""
+    store = StateStore(spark, str(tmp_path / "st"))
+    schema = "host string, inlinks long, bucket int"
+
+    def rows(*hosts):
+        return spark.createDataFrame([(h, 1, 0) for h in hosts], schema)
+
+    def persist(r, **branches):
+        v, chain = store.write_chained(
+            "host_stats", store.read("host_stats", HOST_STATS_SCHEMA), 3, **branches
+        )
+        store.commit(r, {"host_stats": v}, delta_chains={"host_stats": chain})
+        return v, chain
+
+    def inlinks():
+        return {x["host"]: x["inlinks"] for x in store.read("host_stats").collect()}
+
+    # no version yet: the typed empty read has no bucket column
+    assert persist(0, delta=_never, compacted=lambda: rows("a", "b")) == (0, [0])
+    assert os.path.isdir(os.path.join(store._vdir("host_stats", 0), "bucket=0"))
+    # below the cap: unpartitioned deltas extend the chain
+    assert persist(1, delta=lambda: rows("a"), compacted=_never) == (1, [0, 1])
+    assert persist(2, delta=lambda: rows("a"), compacted=_never) == (2, [0, 1, 2])
+    assert not any(
+        d.startswith("bucket=") for d in os.listdir(store._vdir("host_stats", 2))
+    )
+    assert inlinks() == {"a": 3, "b": 1}
+    # at the cap: compact the reconstruction into a new base
+    assert persist(
+        3, delta=_never, compacted=lambda: store.read("host_stats")
+    ) == (3, [3])
+    assert inlinks() == {"a": 3, "b": 1}
+
+
+def test_state_delta_max_chain_below_one_rejected(spark, tmp_path, tiny_web):
+    for bad in (0, -1):
+        with pytest.raises(ValueError, match=r"state_delta_max_chain must be >= 1"):
+            CrawlEngine(
+                spark, tiny_web, str(tmp_path / "s"), _cfg(state_delta_max_chain=bad)
+            )
+
+
 def test_delta_layout_equals_rewrite_layout(spark, tmp_path, tiny_web):
-    """state_delta_max_chain is a physical layout knob only: delta-on and
-    delta-off crawls must produce identical url_seen and crawl_log."""
+    """state_delta_max_chain is a physical layout knob only: a delta chain
+    (cap 4) and compaction every round (cap 1) must produce identical
+    url_seen, crawl_log and host_stats."""
     a = CrawlEngine(
         spark, tiny_web, str(tmp_path / "delta"), _cfg(state_delta_max_chain=4)
     )
     a.run(3)
     b = CrawlEngine(
-        spark, tiny_web, str(tmp_path / "rewrite"), _cfg(state_delta_max_chain=0)
+        spark, tiny_web, str(tmp_path / "rewrite"), _cfg(state_delta_max_chain=1)
     )
     b.run(3)
 
@@ -90,6 +134,9 @@ def test_delta_layout_equals_rewrite_layout(spark, tmp_path, tiny_web):
     # and the delta run really used a chain (>1 live version at some point)
     assert len(a.store.delta_chain("url_seen")) > 1
     assert len(a.store.delta_chain("host_stats")) > 1
+    # while cap 1 compacted every round
+    assert len(b.store.delta_chain("url_seen")) == 1
+    assert len(b.store.delta_chain("host_stats")) == 1
 
 
 def test_delta_write_cost_tracks_wave_not_state(spark, tmp_path, tiny_web):
