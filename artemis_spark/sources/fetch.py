@@ -10,10 +10,12 @@ deterministic join against the synthetic web:
   wave JOIN link_graph  ON url       -> status, location, outlinks, sha
        JOIN payloads    ON image_id  -> bytes, caption, fmt   (200s only)
 
-The wave is salted-repartitioned by host first (north_rule skew
-handling): each Spark task processes a bounded slice of one host — the
-explicit analogue of one netarea's bounded deque + bundles of 20
-(/root/reference/src/Slave.py:40,145-172).
+The synthetic join keeps the wave's routing partitioning by host, so
+it plans with no exchange.  A wave for a real per-host fetcher can be
+salted-repartitioned by host first (``CrawlConfig.fetch_salt``,
+north_rule skew handling): each Spark task then processes a bounded
+slice of one host — the explicit analogue of one netarea's bounded
+deque + bundles of 20 (/root/reference/src/Slave.py:40,145-172).
 
 A real-HTTP fetcher would replace the link_graph join with a
 ``mapInPandas`` batch fetch; the stub below pins the exact UDF
@@ -22,13 +24,8 @@ signature and batch shape so the swap is drop-in.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..functions.urls import salted_host
 
 FETCH_RESULT_COLS = [
     "status",

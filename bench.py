@@ -21,6 +21,7 @@ parallelism levels and writes BENCH.md.
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import statistics
@@ -77,8 +78,17 @@ def _dense_seeds(web_dir: str, tier: str, pages_per_host: int) -> str:
     return path
 
 
+def bloom_bits_per_shard(pages: int, shards: int, fp: float = 0.01) -> int:
+    """Bloom capacity for a tier, never for a core count: m = -n ln p /
+    ln^2 2 with n = 1.25 x pages (headroom for sitemap, torrent, magnet
+    and login URLs), split over the shards and rounded up to 64-bit
+    words.  Both legs of a scaling pair thus probe at the same FP rate."""
+    m_total = -(pages * 5 // 4) * math.log(fp) / math.log(2) ** 2
+    return int(math.ceil(m_total / shards / 64.0)) * 64
+
+
 def bench_crawl(spark, tier: str, rounds: int, budget: int) -> dict:
-    from artemis_spark.datagen import generate
+    from artemis_spark.datagen import TIERS, generate
     from artemis_spark.plans.crawl import CrawlConfig, CrawlEngine
 
     web_dir = os.path.join(tempfile.gettempdir(), f"artemis_bench_web_{tier}")
@@ -103,7 +113,9 @@ def bench_crawl(spark, tier: str, rounds: int, budget: int) -> dict:
     cfg = CrawlConfig(
         politeness_budget=budget,
         num_partitions=cpus,
-        bloom_shards=cpus * 2,
+        bloom_bits_per_shard=bloom_bits_per_shard(
+            TIERS[tier].n_pages, CrawlConfig.bloom_shards
+        ),
         light_stats=True,
         revisit_delay_rounds=int(os.environ.get("ARTEMIS_BENCH_REVISIT", str(10**6))),
         # A/B knobs: quantify the cost of the real per-round work

@@ -1,5 +1,5 @@
 """Bloom-shard layer: no false negatives ever, bounded false positives,
-incremental distributed build, save/load roundtrip (F1 tier;
+incremental executor-side build, saved-shards roundtrip (F1 tier;
 reference analogue Slave.py:112,118-142)."""
 
 import numpy as np
@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 from artemis_spark.functions.urls import host_partition_key
 from artemis_spark.operators.bloom import (
     BloomShards,
+    update_and_save_shards,
     with_bloom_maybe_seen,
     with_bloom_maybe_seen_shard_local,
 )
@@ -34,61 +35,74 @@ def test_shard_isolation():
     assert not bs.might_contain(np.array([1]), pd.Series(["http://a.test/x"]))[0]
 
 
-def test_distributed_build_and_probe(spark):
-    bs = BloomShards(8, bits_per_shard=1 << 16)
-    df = spark.createDataFrame(
-        [(f"http://h{i%11}.test/p{i}", f"h{i%11}.test") for i in range(500)],
+def _urls(spark, tag, n=500):
+    return spark.createDataFrame(
+        [(f"http://h{i%11}.test/{tag}{i}", f"h{i%11}.test") for i in range(n)],
         "url string, host string",
     )
-    bs.update_from_df(df)
+
+
+def test_distributed_build_and_probe(spark, tmp_path):
+    df = _urls(spark, "p")
+    v0, v1 = str(tmp_path / "v0"), str(tmp_path / "v1")
+    update_and_save_shards(df, v0, None, 8, 1 << 16)
+    bs = BloomShards.load_dir(v0)
     probed = with_bloom_maybe_seen(spark, df, bs)
     assert probed.where(~F.col("maybe_seen")).count() == 0  # all known
-    fresh = spark.createDataFrame(
-        [(f"http://h{i%11}.test/NEW{i}", f"h{i%11}.test") for i in range(500)],
-        "url string, host string",
-    )
+    fresh = _urls(spark, "NEW")
     fp = with_bloom_maybe_seen(spark, fresh, bs).where(F.col("maybe_seen")).count()
     assert fp < 25  # <5% false positives skip the anti-join bypass
 
     # incremental: second update must not lose the first round's URLs
-    bs.update_from_df(fresh)
+    update_and_save_shards(fresh, v1, v0, 8, 1 << 16)
+    bs = BloomShards.load_dir(v1)
     assert with_bloom_maybe_seen(spark, df, bs).where(~F.col("maybe_seen")).count() == 0
     assert with_bloom_maybe_seen(spark, fresh, bs).where(~F.col("maybe_seen")).count() == 0
 
 
-def test_save_dir_roundtrip_and_hardlink_reuse(tmp_path):
+def test_saved_shards_roundtrip_and_hardlink_reuse(spark, tmp_path):
+    """update_and_save_shards writes exactly the bits an in-memory filter
+    holds after the same adds; shards a round does not touch are
+    hard-linked from the previous version, dirty ones rewritten."""
     import os
 
-    bs = BloomShards(4, bits_per_shard=1 << 14, n_hashes=5)
-    bs.add(1, pd.Series(["u1", "u2"]))
-    p1 = str(tmp_path / "v0")
-    bs.save_dir(p1)
-    assert (BloomShards.load(p1).bits == bs.bits).all()  # load() dispatches on dir
+    S, m, k = 4, 1 << 14, 5
 
-    bs.add(2, pd.Series(["u3"]))
-    p2 = str(tmp_path / "v1")
-    bs.save_dir(p2, prev_path=p1, dirty_shards={2})
-    assert (BloomShards.load_dir(p2).bits == bs.bits).all()
+    def expected(df, into):
+        rows = df.select(
+            "url", host_partition_key(F.col("host"), S).alias("s")
+        ).collect()
+        for s in {r["s"] for r in rows}:
+            into.add(s, pd.Series([r["url"] for r in rows if r["s"] == s]))
+        return {r["s"] for r in rows}
+
+    mem = BloomShards(S, m, k)
+    first = spark.createDataFrame(
+        [("http://a.test/1", "a.test"), ("http://a.test/2", "a.test")],
+        "url string, host string",
+    )
+    p1, p2 = str(tmp_path / "v0"), str(tmp_path / "v1")
+    assert update_and_save_shards(first, p1, None, S, m, k) == expected(first, mem)
+    assert (BloomShards.load(p1).bits == mem.bits).all()  # load() reads the dir
+
+    second = spark.createDataFrame([("http://b.test/3", "b.test")], "url string, host string")
+    dirty = update_and_save_shards(second, p2, p1, S, m, k)
+    assert dirty == expected(second, mem) and len(dirty) == 1
+    assert (BloomShards.load_dir(p2).bits == mem.bits).all()
     ino = lambda p, s: os.stat(os.path.join(p, f"shard_{s:05d}.npy")).st_ino
-    assert ino(p2, 0) == ino(p1, 0) and ino(p2, 1) == ino(p1, 1)  # clean: linked
-    assert ino(p2, 2) != ino(p1, 2)  # dirty: rewritten
+    for s in range(S):
+        if s in dirty:
+            assert ino(p2, s) != ino(p1, s)  # dirty: rewritten
+        else:
+            assert ino(p2, s) == ino(p1, s)  # clean: linked
 
 
 def test_shard_local_probe_equals_broadcast(spark, tmp_path):
-    bs = BloomShards(8, bits_per_shard=1 << 16)
-    df = spark.createDataFrame(
-        [(f"http://h{i%11}.test/p{i}", f"h{i%11}.test") for i in range(500)],
-        "url string, host string",
-    )
-    bs.update_from_df(df)
+    df = _urls(spark, "p")
     bdir = str(tmp_path / "bloomdir")
-    bs.save_dir(bdir)
-    mixed = df.union(
-        spark.createDataFrame(
-            [(f"http://h{i%11}.test/NEW{i}", f"h{i%11}.test") for i in range(500)],
-            "url string, host string",
-        )
-    )
+    update_and_save_shards(df, bdir, None, 8, 1 << 16)
+    bs = BloomShards.load_dir(bdir)
+    mixed = df.union(_urls(spark, "NEW"))
     via_bc = {
         (r["url"], r["maybe_seen"])
         for r in with_bloom_maybe_seen(spark, mixed, bs).collect()

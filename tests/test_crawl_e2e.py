@@ -206,6 +206,65 @@ def test_crash_between_write_and_commit_is_recovered(spark, tmp_path, tiny_web):
     assert snap(resumed) == snap(straight)
 
 
+def test_round_releases_pins_on_success_and_failure(
+    spark, tmp_path, tiny_web, engine_run, monkeypatch
+):
+    """A round frees every pin and bloom broadcast it made, whether it
+    commits or raises: afterwards the session holds only the engine's
+    two input caches (web pages + payloads).  A fresh engine then
+    resumes the failed round to the straight run."""
+    from artemis_spark.plans import crawl
+    from artemis_spark.sources.state import StateStore
+
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    cfg = CrawlConfig(politeness_budget=BUDGET, num_partitions=4, bloom_shards=8)
+    # the new engine's caches must be new RDDs, not engine_run's reused
+    spark.catalog.clearCache()
+    before = persisted()
+    eng = CrawlEngine(spark, tiny_web, str(tmp_path / "s"), cfg)
+    eng.bootstrap()
+    eng.run_round()
+    assert len(persisted() - before) == 2
+
+    broadcasts = []
+    probe = crawl.with_bloom_maybe_seen
+
+    def recording_probe(*args, **kwargs):
+        out = probe(*args, **kwargs)
+        broadcasts.extend(kwargs["bc_registry"])
+        return out
+
+    def failing_append(*args, **kwargs):
+        raise RuntimeError("injected append_round failure")
+
+    monkeypatch.setattr(crawl, "with_bloom_maybe_seen", recording_probe)
+    monkeypatch.setattr(StateStore, "append_round", failing_append)
+    with pytest.raises(RuntimeError, match="injected"):
+        eng.run_round()
+    monkeypatch.undo()
+    assert len(persisted() - before) == 2
+    assert broadcasts and not any(bc._jbroadcast.isValid() for bc in broadcasts)
+    assert eng.store.last_round() == 0
+
+    resumed = CrawlEngine(spark, tiny_web, str(tmp_path / "s"), cfg)
+    resumed.run(N_ROUNDS - 1)
+
+    def snap(e):
+        seen = {
+            (r["url"], r["last_hash"], r["refresh_rate"])
+            for r in e.store.read("url_seen").collect()
+        }
+        log = {
+            (r["round"], r["url"], r["status"], r["image_id"], r["phash"])
+            for r in e.store.read_appended("crawl_log").collect()
+        }
+        return seen, log
+
+    assert snap(resumed) == snap(engine_run[0])
+
+
 def test_markup_extraction_equals_outlink_join(spark, tmp_path, tiny_web):
     """T2/T3: extracting outlinks from the rendered page BYTES (markup
     grammar) must produce the identical crawl to the legacy

@@ -52,11 +52,14 @@ Losing recompute lineage is safe by design: the committed state store
 is the crash-recovery mechanism (rounds are resumable), not Spark
 recompute.  On a real cluster use `reliableCheckpoint` off the hot
 path or simply accept executor-loss recompute of one round's pins.
+Pins are released through their checkpoint RDD when the round ends,
+on every exit path, because `DataFrame.unpersist()` does not release
+a `localCheckpoint`.
 
 r5 measurement note: `localCheckpoint(eager=False)` is NOT lazy for
 AQE plans — building the checkpoint RDD materializes every non-result
 query stage at pin-CREATION time (verified: a groupBy pin's create
-cost 12.9s vs first count 1.9s).  So each `_pin()` in the round runs
+cost 12.9s vs first count 1.9s).  So each `pin()` in the round runs
 its upstream stages right where it is created; the round is a sequence
 of pin materializations, and anything derived from an existing pin is
 a cheap leaf scan.  This is why every branch split (robots_blocked /

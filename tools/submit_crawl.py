@@ -174,7 +174,6 @@ def main() -> None:
     cfg = CrawlConfig(
         politeness_budget=args.budget,
         num_partitions=args.partitions,
-        bloom_shards=max(args.partitions * 2, 8),
         revisit_delay_rounds=args.revisit_rounds,
         extract_markup=not args.no_markup,
         decode_payloads=not args.no_decode,
